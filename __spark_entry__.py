@@ -1156,18 +1156,18 @@ _TDE_GOLDENS = [
 ]
 
 
-def _q_ora_tde_decrypt(spark, sf_dir):
-    """P10 — full Oracle TDE column decrypt over the reference's public
-    vectors: data-key blob parse, [ct‖mac‖salt-iv] layout, zero-IV
-    no-salt path, orcl pad strip (OraCdcTdeColumnDecrypter.java)."""
+def _tde_decrypt_goldens(spark, goldens):
+    """Decrypt TDE golden rows (id, blob_hex, enc_alg, int_alg, salted,
+    column_hex, plaintext) with one decrypter per row, as ENC$ metadata
+    arrives per column; returns (id, s) with the decrypted text."""
     from oracdc_spark.functions.tde import OraTdeColumnDecrypter
     from oracdc_spark.session import ship_package
 
     ship_package(spark)
     rows = [(i, blob, enc, intg, salt, ct)
-            for i, blob, enc, intg, salt, ct, _ in _TDE_GOLDENS]
-    df = _ldf(spark, 
-        rows, "id bigint, blob string, enc int, intg int, salted boolean, ct string"
+            for i, blob, enc, intg, salt, ct, _ in goldens]
+    df = _ldf(
+        spark, rows, "id bigint, blob string, enc int, intg int, salted boolean, ct string"
     )
 
     import pandas as pd
@@ -1187,13 +1187,20 @@ def _q_ora_tde_decrypt(spark, sf_dir):
     return df.select("id", _dec("blob", "enc", "intg", "salted", "ct").alias("s"))
 
 
+def _q_ora_tde_decrypt(spark, sf_dir):
+    """P10 — full Oracle TDE column decrypt over the reference's public
+    vectors: data-key blob parse, [ct‖mac‖salt-iv] layout, zero-IV
+    no-salt path, orcl pad strip (OraCdcTdeColumnDecrypter.java)."""
+    return _tde_decrypt_goldens(spark, _TDE_GOLDENS)
+
+
 # TDE INTALG 3 (GCM) goldens: wallet-blob layout (16-byte header + key),
 # column layout [ct | tag 0x10 | salt-iv 0x10] per
-# OraCdcTdeColumnDecrypter.java:160-178.  Ciphertext+tag generated with
-# an INDEPENDENT implementation (OpenSSL via `cryptography`) — the
-# engine's pure-Python SP 800-38D construction must reproduce the
-# plaintext byte-exact and verify the tag.  (id, blob_hex, enc_alg,
-# int_alg, salted, column_hex, plaintext)
+# OraCdcTdeColumnDecrypter.java:160-178.  Ciphertext+tag generated
+# once with OpenSSL (via `cryptography`) and frozen here — the engine's
+# layout split and 16-byte-IV GCM call must reproduce the plaintext
+# byte-exact and verify the tag.  (id, blob_hex, enc_alg, int_alg,
+# salted, column_hex, plaintext)
 _TDE_GCM_GOLDENS = [
     (0, "05060708090a0b0c0d0e0f10111213140b0e1114171a1d202326292c2f32353800000000", 2, 3, True, "455e53f4ad59fdd076b0484e0cad3cb29ea4d3053f666f44978ff15e9c39cc86ac8b7a5b0708090a0b0c0d0e0f10111213141516", "GCM_AES128_SALTED_OK"),
     (1, "0a0b0c0d0e0f1011121314151617181916191c1f2225282b2e3134373a3d404300000000", 2, 3, False, "4a4a7a981244cb1ac8671b3ce93a72b5e3f9fa2ec419990c058e1917a6778c8f6111f914c5cad41213", "GCM_AES128_NOSALT_ZERO_IV"),
@@ -1204,36 +1211,14 @@ _TDE_GCM_GOLDENS = [
 
 
 def _q_ora_tde_gcm(spark, sf_dir):
-    """P10 GCM — TDE INTALG 3 column decrypt: full SP 800-38D AES-GCM
-    (CTR keystream + GHASH, 16-byte Oracle salt-IV J0 derivation, tag
-    VERIFIED over the ciphertext) across AES-128/192/256, salted and
-    zero-IV unsalted layouts.  The reference's shipped GCM branch is
-    dead as written (tag region passed as AAD with a tagless doFinal,
-    OraCdcTdeColumnDecrypter.java:177-183); this implements the evident
-    intent — divergence documented in COVERAGE.md."""
-    from oracdc_spark.functions.tde import OraTdeColumnDecrypter
-    from oracdc_spark.session import ship_package
-
-    ship_package(spark)
-    rows = [(i, blob, enc, intg, salt, ct)
-            for i, blob, enc, intg, salt, ct, _ in _TDE_GCM_GOLDENS]
-    df = _ldf(spark, 
-        rows, "id bigint, blob string, enc int, intg int, salted boolean, ct string"
-    )
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(StringType())
-    def _dec(blob, enc, intg, salted, ct):
-        out = []
-        for b, e, g, s, c in zip(blob, enc, intg, salted, ct):
-            d = OraTdeColumnDecrypter(bytes.fromhex(b), int(e), int(g))
-            out.append(d.decrypt(bytes.fromhex(c), bool(s)).decode("ascii"))
-        return pd.Series(out)
-
-    return df.select("id", _dec("blob", "enc", "intg", "salted", "ct").alias("s"))
+    """P10 GCM — TDE INTALG 3 column decrypt: SP 800-38D AES-GCM with
+    the 16-byte Oracle salt-IV, tag VERIFIED over the ciphertext,
+    across AES-128/192/256, salted and zero-IV unsalted layouts.  The
+    reference's shipped GCM branch is dead as written (tag region passed
+    as AAD with a tagless doFinal, OraCdcTdeColumnDecrypter.java:177-183);
+    this implements the evident intent — divergence documented in
+    COVERAGE.md."""
+    return _tde_decrypt_goldens(spark, _TDE_GCM_GOLDENS)
 
 
 def _q_ora_charset_decode(spark, sf_dir):

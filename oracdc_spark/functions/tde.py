@@ -1,40 +1,29 @@
 """TDE column decryption (P10, SURVEY §2.4).
 
-Reference: internals/OraCdcTdeColumnDecrypter.java AES-decrypts
-encrypted/salted column bytes with the wallet master key *before* type
-decode (wired through GenericDecoders.java:170-207).
+Reference: internals/OraCdcTdeColumnDecrypter.java decrypts
+encrypted/salted column bytes with the wallet-decrypted data key
+*before* type decode (wired through GenericDecoders.java:170-207),
+through the platform's cipher provider (JCE).
 
-Spark-first restatement: `aes_decrypt` is a built-in JVM expression —
-the decrypt stays inside WholeStageCodegen and composes with the pandas
-UDF type decoders afterwards:
+Spark-first restatement: the cipher is the platform provider here too —
+OpenSSL via `cryptography` — called from an Arrow-batched pandas UDF,
+the cold decode hop of the change feed, placed like the LOB inflate
+UDF.  This module keeps only the Oracle-specific parts: the wallet-blob
+key parse, the [ct | mac | salt-iv] layout split, the tolerant Oracle
+pad strip and the ENC$.ENCALG/INTALG validation.  The decrypted bytes
+compose with the byte decoders downstream:
 
-    decrypted = tde_decrypt(F.col("enc_bytes"), key)
-    value     = ora_number_to_double(F.hex(decrypted))
+    value = ora_number_to_double(F.hex(tde_decrypt_udf(blob, 4, 1, True)("enc")))
 
-Key management (wallet) is deployment plumbing — the key arrives as a
-config secret; SALT handling maps to AES-CBC/GCM IV prefixes which
-aes_decrypt consumes natively.
+Executor-side dependency: ``cryptography`` >= 43 (TripleDES lives in
+``hazmat.decrepit`` from that release on).
 """
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves the UDF's type hints
-import pyspark.sql.functions as F
-from pyspark.sql import Column
-
-
-def tde_encrypt(col: Column | str, key: str, mode: str = "GCM") -> Column:
-    """Test-side helper: encrypt as the wallet would (AES-GCM default)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.aes_encrypt(c, F.lit(key), F.lit(mode))
-
-
-def tde_decrypt(col: Column | str, key: str, mode: str = "GCM") -> Column:
-    """Decrypt an encrypted column payload; compose with the byte
-    decoders downstream."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.aes_decrypt(c, F.lit(key), F.lit(mode))
-
+from cryptography.exceptions import InvalidTag
+from cryptography.hazmat.decrepit.ciphers.algorithms import TripleDES
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 # ---------------------------------------------------------------------------
 # Oracle TDE column layout (OraCdcTdeColumnDecrypter.java:157-196)
@@ -57,18 +46,12 @@ def tde_decrypt(col: Column | str, key: str, mode: str = "GCM") -> Column:
 #   1 (3DES168) / 3 (AES192) / 4 (AES256) (:80-101).
 #
 # Spark's builtin aes_decrypt offers no CBC/NoPadding combination and a
-# 12-byte GCM IV (Oracle's is 16), so the byte-exact path is a pure-
-# Python AES-CBC inverse cipher (below) behind an Arrow-batched pandas
-# UDF — the cold decode hop of the change feed, same placement as the
-# LOB inflate UDF.  The S-box and round constants are DERIVED from
-# GF(2^8) arithmetic at import, not pasted tables.  3DES (ENCALG 1) is a
-# pure-Python FIPS 46-3 implementation (functions/des.py), byte-exact vs
-# JCE DESede/CBC/NoPadding golden vectors.  GCM (INTALG 3) is the full
-# SP 800-38D construction (CTR keystream + GHASH over the same forward
-# AES primitive), byte-exact vs independent OpenSSL-generated vectors —
-# note the reference's own GCM branch is dead as written (it hands JCE a
-# tagless ciphertext with the tag region as AAD and can never verify);
-# this engine implements the evident intent, see decrypt() below.
+# 12-byte GCM IV (Oracle's is 16), so the cipher runs in the UDF:
+# AES or 3DES (DESede) in CBC with no padding for INTALG 1/2, and
+# AES-GCM with the 16-byte salt-IV for INTALG 3.  The reference's own
+# GCM branch is dead as written (it hands JCE a tagless ciphertext with
+# the tag region as AAD and can never verify); this engine implements
+# the evident intent, see decrypt() below.
 
 ENCALG_3DES168 = 1
 ENCALG_AES128 = 2
@@ -77,234 +60,6 @@ ENCALG_AES256 = 4
 INTALG_SHA1 = 1
 INTALG_NOMAC = 2
 INTALG_GCM = 3
-
-MAC_SHA1 = "SHA1"    # ENC$.INTALG = 1
-MAC_NOMAC = "NOMAC"  # ENC$.INTALG = 2
-
-_MAC_LEN = {MAC_SHA1: 20, MAC_NOMAC: 0}
-
-_ZERO_IV = bytes(16)
-
-
-# -- AES inverse cipher (FIPS-197), table-free construction ------------------
-
-
-def _gf_mul(a: int, b: int) -> int:
-    r = 0
-    for _ in range(8):
-        if b & 1:
-            r ^= a
-        hi = a & 0x80
-        a = (a << 1) & 0xFF
-        if hi:
-            a ^= 0x1B
-        b >>= 1
-    return r
-
-
-def _build_boxes() -> tuple[list[int], list[int]]:
-    # multiplicative inverse via log/antilog over generator 3
-    alog = [0] * 255
-    log = [0] * 256
-    x = 1
-    for i in range(255):
-        alog[i] = x
-        log[x] = i
-        x = _gf_mul(x, 3)
-    sbox = [0] * 256
-    for a in range(256):
-        inv = 0 if a == 0 else alog[(255 - log[a]) % 255]
-        b = inv
-        for shift in (1, 2, 3, 4):
-            b ^= ((inv << shift) | (inv >> (8 - shift))) & 0xFF
-        sbox[a] = b ^ 0x63
-    inv_sbox = [0] * 256
-    for a, s in enumerate(sbox):
-        inv_sbox[s] = a
-    return sbox, inv_sbox
-
-
-_SBOX, _INV_SBOX = _build_boxes()
-
-
-def _expand_key(key: bytes) -> list[list[int]]:
-    nk = len(key) // 4
-    nr = nk + 6
-    words = [list(key[4 * i : 4 * i + 4]) for i in range(nk)]
-    rcon = 1
-    for i in range(nk, 4 * (nr + 1)):
-        t = list(words[i - 1])
-        if i % nk == 0:
-            t = t[1:] + t[:1]
-            t = [_SBOX[b] for b in t]
-            t[0] ^= rcon
-            rcon = _gf_mul(rcon, 2)
-        elif nk > 6 and i % nk == 4:
-            t = [_SBOX[b] for b in t]
-        words.append([a ^ b for a, b in zip(words[i - nk], t)])
-    return words
-
-
-def _decrypt_block(ct: bytes, words: list[list[int]]) -> bytes:
-    nr = len(words) // 4 - 1
-    # state[r + 4c] = input[r + 4c] (column-major per FIPS-197)
-    s = list(ct)
-
-    def add_round_key(rnd: int) -> None:
-        for c in range(4):
-            w = words[4 * rnd + c]
-            for r in range(4):
-                s[r + 4 * c] ^= w[r]
-
-    def inv_shift_rows() -> None:
-        for r in range(1, 4):
-            row = [s[r + 4 * c] for c in range(4)]
-            row = row[-r:] + row[:-r]  # rotate RIGHT by r
-            for c in range(4):
-                s[r + 4 * c] = row[c]
-
-    def inv_sub_bytes() -> None:
-        for i in range(16):
-            s[i] = _INV_SBOX[s[i]]
-
-    def inv_mix_columns() -> None:
-        for c in range(4):
-            a = s[4 * c : 4 * c + 4]
-            s[4 * c + 0] = _gf_mul(a[0], 14) ^ _gf_mul(a[1], 11) ^ _gf_mul(a[2], 13) ^ _gf_mul(a[3], 9)
-            s[4 * c + 1] = _gf_mul(a[0], 9) ^ _gf_mul(a[1], 14) ^ _gf_mul(a[2], 11) ^ _gf_mul(a[3], 13)
-            s[4 * c + 2] = _gf_mul(a[0], 13) ^ _gf_mul(a[1], 9) ^ _gf_mul(a[2], 14) ^ _gf_mul(a[3], 11)
-            s[4 * c + 3] = _gf_mul(a[0], 11) ^ _gf_mul(a[1], 13) ^ _gf_mul(a[2], 9) ^ _gf_mul(a[3], 14)
-
-    add_round_key(nr)
-    for rnd in range(nr - 1, 0, -1):
-        inv_shift_rows()
-        inv_sub_bytes()
-        add_round_key(rnd)
-        inv_mix_columns()
-    inv_shift_rows()
-    inv_sub_bytes()
-    add_round_key(0)
-    return bytes(s)
-
-
-def _encrypt_block(pt: bytes, words: list[list[int]]) -> bytes:
-    """AES forward cipher (FIPS-197 §5.1) — needed by GCM: the CTR
-    keystream and the GHASH subkey both use E_K, never the inverse."""
-    nr = len(words) // 4 - 1
-    s = list(pt)
-
-    def add_round_key(rnd: int) -> None:
-        for c in range(4):
-            w = words[4 * rnd + c]
-            for r in range(4):
-                s[r + 4 * c] ^= w[r]
-
-    def shift_rows() -> None:
-        for r in range(1, 4):
-            row = [s[r + 4 * c] for c in range(4)]
-            row = row[r:] + row[:r]  # rotate LEFT by r
-            for c in range(4):
-                s[r + 4 * c] = row[c]
-
-    def sub_bytes() -> None:
-        for i in range(16):
-            s[i] = _SBOX[s[i]]
-
-    def mix_columns() -> None:
-        for c in range(4):
-            a = s[4 * c : 4 * c + 4]
-            s[4 * c + 0] = _gf_mul(a[0], 2) ^ _gf_mul(a[1], 3) ^ a[2] ^ a[3]
-            s[4 * c + 1] = a[0] ^ _gf_mul(a[1], 2) ^ _gf_mul(a[2], 3) ^ a[3]
-            s[4 * c + 2] = a[0] ^ a[1] ^ _gf_mul(a[2], 2) ^ _gf_mul(a[3], 3)
-            s[4 * c + 3] = _gf_mul(a[0], 3) ^ a[1] ^ a[2] ^ _gf_mul(a[3], 2)
-
-    add_round_key(0)
-    for rnd in range(1, nr):
-        sub_bytes()
-        shift_rows()
-        mix_columns()
-        add_round_key(rnd)
-    sub_bytes()
-    shift_rows()
-    add_round_key(nr)
-    return bytes(s)
-
-
-# -- AES-GCM (NIST SP 800-38D): CTR keystream + GHASH ------------------------
-
-
-def _gf128_mul(x: int, y: int) -> int:
-    """GF(2^128) multiply, SP 800-38D §6.3 bit convention (R = 0xE1…)."""
-    R = 0xE1000000000000000000000000000000
-    z, v = 0, y
-    for i in range(127, -1, -1):
-        if (x >> i) & 1:
-            z ^= v
-        v = (v >> 1) ^ R if v & 1 else v >> 1
-    return z
-
-
-def _ghash(h: int, *segments: bytes) -> int:
-    """GHASH_H over zero-padded segments followed by their 64-bit bit
-    lengths (§6.4)."""
-    y = 0
-    for seg in segments:
-        for off in range(0, len(seg), 16):
-            block = seg[off : off + 16].ljust(16, b"\x00")
-            y = _gf128_mul(y ^ int.from_bytes(block, "big"), h)
-    lens = b"".join((8 * len(seg)).to_bytes(8, "big") for seg in segments)
-    if len(lens) == 8:  # single-segment use (IV hashing): pad to a block
-        lens = b"\x00" * 8 + lens
-    return _gf128_mul(y ^ int.from_bytes(lens, "big"), h)
-
-
-def _inc32(block: bytes) -> bytes:
-    n = (int.from_bytes(block[12:], "big") + 1) & 0xFFFFFFFF
-    return block[:12] + n.to_bytes(4, "big")
-
-
-def aes_gcm_decrypt(
-    ct: bytes, key: bytes, iv: bytes, tag: bytes, aad: bytes = b""
-) -> bytes:
-    """AES-GCM authenticated decryption (SP 800-38D §7.2) for ANY IV
-    length — 12-byte IVs use the iv‖0^31‖1 J0; other lengths (Oracle's
-    TDE salt-IV is 16 bytes) derive J0 = GHASH_H(iv).  Raises
-    ``ValueError`` on tag mismatch (JCE AEADBadTagException analog).
-    Byte-exact vs independent golden vectors (tests/test_vector_sqlredo_tde.py)."""
-    words = _expand_key(key)
-    h = int.from_bytes(_encrypt_block(bytes(16), words), "big")
-    if len(iv) == 12:
-        j0 = iv + b"\x00\x00\x00\x01"
-    else:
-        j0 = _ghash(h, iv).to_bytes(16, "big")
-    # CTR-mode keystream from inc32(J0)
-    out = bytearray()
-    cb = j0
-    for off in range(0, len(ct), 16):
-        cb = _inc32(cb)
-        ks = _encrypt_block(cb, words)
-        chunk = ct[off : off + 16]
-        out.extend(a ^ b for a, b in zip(chunk, ks))
-    s = _ghash(h, aad, ct)
-    expect = bytes(
-        a ^ b
-        for a, b in zip(_encrypt_block(j0, words), s.to_bytes(16, "big"))
-    )[: len(tag)]
-    if expect != bytes(tag):
-        raise ValueError("GCM tag mismatch")
-    return bytes(out)
-
-
-def _aes_cbc_decrypt(ct: bytes, key: bytes, iv: bytes) -> bytes:
-    words = _expand_key(key)
-    out = bytearray()
-    prev = iv
-    for off in range(0, len(ct), 16):
-        block = ct[off : off + 16]
-        plain = _decrypt_block(block, words)
-        out.extend(a ^ b for a, b in zip(plain, prev))
-        prev = block
-    return bytes(out)
 
 
 def orcl_unpad(plaintext: bytes) -> bytes:
@@ -353,18 +108,15 @@ class OraTdeColumnDecrypter:
             # GCM is an AES mode; the reference's cipher selection pins
             # 3DES to DESede/CBC regardless of INTALG (:104-110)
             raise ValueError("INTALG GCM requires an AES ENCALG")
-        self._key = data_key_from_wallet_blob(bytes(dec_data_key), enc_alg)
+        key = data_key_from_wallet_blob(bytes(dec_data_key), enc_alg)
         self._int_alg = int_alg
         if enc_alg == ENCALG_3DES168:
             # ENCALG 1: DESede/CBC/NoPadding, 8-byte blocks and IV
             # (OraCdcTdeColumnDecrypter.java:62-72,102-107,160-173)
-            from oracdc_spark.functions.des import Des3Ede
-
-            self._block = 8
-            self._des3 = Des3Ede(self._key)
+            self._alg = TripleDES(key)
         else:
-            self._block = 16
-            self._des3 = None
+            self._alg = algorithms.AES(key)
+        self._block = self._alg.block_size // 8
 
     def decrypt(self, column_data: bytes, salt: bool) -> bytes:
         data = bytes(column_data)
@@ -373,12 +125,20 @@ class OraTdeColumnDecrypter:
             # salted columns carry the CBC IV as the LAST block-size
             # bytes (16 for AES, 8 for 3DES — reference :160-168)
             ct_len -= self._block
-            iv = data[ct_len : ct_len + self._block]
+            iv = data[ct_len:]
         else:
             iv = bytes(self._block)
         if self._int_alg == INTALG_SHA1:
             ct_len -= 0x14
         elif self._int_alg == INTALG_GCM:
+            ct_len -= 0x10
+        if ct_len < 0:
+            raise ValueError(
+                f"TDE column of {len(data)} bytes is shorter than its "
+                "salt-IV and MAC/tag suffix"
+            )
+        ct = data[:ct_len]
+        if self._int_alg == INTALG_GCM:
             # INTALG 3 layout: [ct | tag 0x10 | salt-iv 0x10] (reference
             # :160-178).  The shipped JCE branch cannot succeed as
             # written — it hands doFinal a tag-LESS ciphertext while
@@ -386,21 +146,19 @@ class OraTdeColumnDecrypter:
             # requires ciphertext‖tag), so every call ends in
             # AEADBadTagException; no vector exists in its suite.  This
             # engine implements the evident INTENT: standard SP 800-38D
-            # AES-GCM over the documented layout — CTR decrypt with the
-            # 16-byte salt-IV (zero IV when unsalted), the 0x10 suffix
-            # VERIFIED as the tag over the ciphertext, empty AAD.
-            # Divergence (reference always-throws vs verified decrypt)
-            # noted in COVERAGE.md.
-            ct_len -= 0x10
-            return orcl_unpad(
-                aes_gcm_decrypt(
-                    data[:ct_len], self._key, iv, data[ct_len : ct_len + 0x10]
-                )
-            )
-        if self._des3 is not None:
-            plain = self._des3.cbc_decrypt(data[:ct_len], iv)
+            # AES-GCM over the documented layout — the 16-byte salt-IV
+            # (zero IV when unsalted), the 0x10 suffix VERIFIED as the
+            # tag over the ciphertext, empty AAD.  Divergence (reference
+            # always-throws vs verified decrypt) noted in COVERAGE.md.
+            tag = data[ct_len : ct_len + 0x10]
+            dec = Cipher(self._alg, modes.GCM(iv, tag)).decryptor()
+            try:
+                plain = dec.update(ct) + dec.finalize()
+            except InvalidTag:
+                raise ValueError("GCM tag mismatch") from None
         else:
-            plain = _aes_cbc_decrypt(data[:ct_len], self._key, iv)
+            dec = Cipher(self._alg, modes.CBC(iv)).decryptor()
+            plain = dec.update(ct) + dec.finalize()
         return orcl_unpad(plain)
 
 
@@ -421,43 +179,3 @@ def tde_decrypt_udf(dec_data_key: bytes, enc_alg: int, int_alg: int, salt: bool)
         return data.map(lambda b: None if b is None else dec.decrypt(b, salt))
 
     return _udf
-
-
-# -- JVM-expression path (non-Oracle layouts) --------------------------------
-
-
-def tde_decrypt_column(
-    col: Column | str, key: bytes, salt: bool = True, int_alg: str = MAC_SHA1
-) -> Column:
-    """JVM-side decrypt of the Oracle layout via Spark's aes_decrypt —
-    usable when the payload carries valid PKCS padding (Spark has no
-    CBC/NoPadding); stays inside WholeStageCodegen.  MAC bytes are
-    stripped, not verified, like the reference."""
-    c = F.col(col) if isinstance(col, str) else col
-    mac_len = _MAC_LEN[int_alg.upper()]
-    iv_len = 16 if salt else 0
-    ct_len = F.length(c) - F.lit(iv_len + mac_len)
-    ct = F.substring(c, 1, ct_len)
-    if salt:
-        # IV = LAST 16 bytes (after the MAC — reference :160-168)
-        iv = c.substr(F.length(c) - F.lit(15), F.lit(16))
-    else:
-        iv = F.lit(_ZERO_IV)
-    return F.aes_decrypt(
-        F.concat(iv, ct), F.lit(key), F.lit("CBC"), F.lit("PKCS")
-    )
-
-
-def tde_encrypt_column(
-    col: Column | str, key: bytes, int_alg: str = MAC_SHA1
-) -> Column:
-    """Test-side inverse: produce the salted Oracle layout
-    (ct || mac || iv) from plaintext.  Spark's CBC encrypt emits
-    iv || ct; rearrange and insert a placeholder MAC (the decrypter
-    strips without verifying, like the reference)."""
-    c = F.col(col) if isinstance(col, str) else col
-    enc = F.aes_encrypt(c, F.lit(key), F.lit("CBC"), F.lit("PKCS"))
-    iv = F.substring(enc, 1, 16)
-    ct = enc.substr(F.lit(17), F.length(enc) - F.lit(16))
-    mac = F.lit(bytes(_MAC_LEN[int_alg.upper()]))
-    return F.concat(ct, mac, iv)

@@ -368,8 +368,8 @@ AUTHORSHIP: dict[str, tuple[str, str]] = {
     "ora_charset_decode": (REPLAY, "tests/test_oson_charsets.py::TestCharsetIds::test_decode_goldens (LEGITIMATELY FINITE-TABLE: the NLS id->codec map is a finite enumeration from public charset tables with no hypothesis domain beyond it — goldens over the table's sampled points ARE the strongest available evidence; the byte->char mapping itself is Python's codec, not repo code)"),
     "ora_charset_id_decode": (REPLAY, "tests/test_oson_charsets.py::TestCharsetIds::test_id_resolution (LEGITIMATELY FINITE-TABLE: same rationale as ora_charset_decode — a finite id->name table admits only exhaustive/golden checks)"),
     "ora_vector_decode": (REPLAY, "tests/test_authorship_upgrades.py::test_vector_decode_roundtrip_independent_encoder (hypothesis: inversion of an independently written encoder built from the documented layout, f32/f64/int8, random prefixes; goldens tests/test_vector_sqlredo_tde.py::TestVector retained)"),
-    "ora_tde_decrypt": (REPLAY, "tests/test_tde_properties.py::test_cbc_layout_roundtrip (OpenSSL-independent roundtrip)"),
-    "ora_tde_gcm": (REPLAY, "tests/test_tde_properties.py::test_gcm_column_layout_roundtrip"),
+    "ora_tde_decrypt": (REPLAY, "tests/test_tde_properties.py::test_cbc_layout_roundtrip (layout-only: the engine and this property share OpenSSL via `cryptography`, so it verifies the [ct|mac|salt-iv] split, zero IV and pad strip, NOT the cipher; the reference's JCE AES vectors and the JCE DESede + FIPS 46-3 vectors in tests/test_vector_sqlredo_tde.py::TestTdeGoldenVectors are the independent anchor — both legs required)"),
+    "ora_tde_gcm": (REPLAY, "tests/test_tde_properties.py::test_gcm_column_layout_roundtrip (layout-only, same shared-OpenSSL caveat as ora_tde_decrypt; the OpenSSL GCM goldens in __spark_entry__._TDE_GCM_GOLDENS, checked by TestTdeGoldenVectors::test_gcm_tde_column_goldens, are the independent anchor — both legs required)"),
     "oson_decode": (REPLAY, "tests/test_oson_properties.py::test_decode_inverts_independent_encoder"),
     "sql_redo_parse": (REPLAY, "tests/test_sqlredo_properties.py::test_update_roundtrip (render-parse inversion; insert/delete legs too)"),
     # ---- registry / SMT ----

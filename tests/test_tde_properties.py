@@ -1,29 +1,29 @@
 """Property-based roundtrips for P10 TDE column decryption.
 
-The golden-vector suite pins the reference's published test vectors
-(OraCdcTdeColumnDecrypterTest.java); here the INVERSE direction is a
-generated theorem: for arbitrary plaintext, key material, algorithm and
-layout options, a column encrypted by an INDEPENDENT implementation
-(OpenSSL via `cryptography`) into the documented Oracle layout
-[ct | mac? | salt-iv?] (OraCdcTdeColumnDecrypter.java:160-178) is
-decrypted back to the exact plaintext by the pure-Python decrypter —
-across AES-128/192/256 and 3DES-168, SHA1/NOMAC, salted and unsalted,
-and the INTALG-3 GCM layout; and any single-bit tag tamper is caught.
+The decrypter and these properties share one cipher implementation
+(OpenSSL via `cryptography`), so the properties verify the ORACLE
+LAYOUT code, not the cipher: for arbitrary plaintext, key material,
+algorithm and layout options, a column encrypted into the documented
+Oracle layout [ct | mac? | salt-iv?] (OraCdcTdeColumnDecrypter.java:
+160-178) is decrypted back to the exact plaintext — across
+AES-128/192/256 and 3DES-168, SHA1/NOMAC, salted and unsalted, and the
+INTALG-3 GCM layout; any single-bit tag tamper is caught; and a column
+shorter than its suffix is rejected.
+
+The independent anchor for the cipher itself is the golden suite in
+tests/test_vector_sqlredo_tde.py::TestTdeGoldenVectors: the reference's
+JCE AES vectors (OraCdcTdeColumnDecrypterTest.java), the JCE DESede
+vectors, the FIPS 46-3 single-DES vector and the OpenSSL GCM goldens.
+Both legs are required.
 """
 
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
-
-cryptography = pytest.importorskip("cryptography")
+from cryptography.hazmat.decrepit.ciphers.algorithms import TripleDES
 from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
-
-try:  # TripleDES moved in cryptography >= 43
-    from cryptography.hazmat.decrepit.ciphers.algorithms import TripleDES
-except ImportError:  # pragma: no cover - older layout
-    TripleDES = algorithms.TripleDES
+from hypothesis import assume, example, given, settings
+from hypothesis import strategies as st
 
 from oracdc_spark.functions.tde import (
     ENCALG_3DES168,
@@ -110,3 +110,31 @@ def test_gcm_column_layout_roundtrip(pt, enc_alg, salt, key_seed, iv_seed, tampe
     else:
         with pytest.raises(ValueError, match="tag mismatch"):
             dec.decrypt(layout, salt=salt)
+
+
+@given(
+    enc_alg=st.sampled_from(
+        [ENCALG_3DES168, ENCALG_AES128, ENCALG_AES192, ENCALG_AES256]
+    ),
+    int_alg=st.sampled_from([INTALG_SHA1, INTALG_NOMAC, INTALG_GCM]),
+    salt=st.booleans(),
+    n=st.integers(min_value=0, max_value=35),  # longest suffix: 16 + 20
+)
+# lengths that once decrypted a negative-length slice into b'' or garbage
+@example(enc_alg=ENCALG_AES256, int_alg=INTALG_SHA1, salt=True, n=18)
+@example(enc_alg=ENCALG_AES256, int_alg=INTALG_SHA1, salt=True, n=26)
+@example(enc_alg=ENCALG_AES256, int_alg=INTALG_SHA1, salt=True, n=34)
+@example(enc_alg=ENCALG_3DES168, int_alg=INTALG_SHA1, salt=True, n=14)
+@example(enc_alg=ENCALG_3DES168, int_alg=INTALG_SHA1, salt=True, n=18)
+@settings(**_SETTINGS)
+def test_column_shorter_than_suffix_raises(enc_alg, int_alg, salt, n):
+    """Every column shorter than its salt-IV + MAC/tag suffix raises
+    ValueError instead of decrypting a negative-length slice."""
+    # GCM is an AES mode: the 3DES combination is rejected at construction
+    assume(not (int_alg == INTALG_GCM and enc_alg == ENCALG_3DES168))
+    block = 8 if enc_alg == ENCALG_3DES168 else 16
+    mac = {INTALG_SHA1: 20, INTALG_NOMAC: 0, INTALG_GCM: 16}[int_alg]
+    assume(n < (block if salt else 0) + mac)
+    dec = OraTdeColumnDecrypter(bytes(0x30), enc_alg, int_alg)
+    with pytest.raises(ValueError, match="shorter"):
+        dec.decrypt(bytes(range(n)), salt=salt)

@@ -87,13 +87,12 @@ class TestTde:
     @pytest.mark.slow
     def test_roundtrip_then_decode(self, spark):
         from oracdc_spark.functions.decoders import encode_number
-        from oracdc_spark.functions.tde import tde_decrypt, tde_encrypt
 
-        key = "0123456789abcdef"  # 16-byte AES key
+        key = F.lit("0123456789abcdef")  # 16-byte AES key
         num = encode_number("1234.56")
         df = spark.createDataFrame([(num,)], "payload binary").coalesce(1)
-        enc = df.select(tde_encrypt("payload", key).alias("enc"))
-        dec = enc.select(tde_decrypt("enc", key).alias("dec"))
+        enc = df.select(F.aes_encrypt("payload", key, F.lit("GCM")).alias("enc"))
+        dec = enc.select(F.aes_decrypt("enc", key, F.lit("GCM")).alias("dec"))
         got = dec.first().dec
         assert bytes(got) == num
         # compose with the type decoder (the reference's decrypt→decode chain)
@@ -145,7 +144,7 @@ class TestVectorBool:
 
 class TestTdeGoldenVectors:
     """The reference's own public test vectors
-    (OraCdcTdeColumnDecrypterTest.java) through the pure-Python mirror:
+    (OraCdcTdeColumnDecrypterTest.java) through the Python mirror:
     the wallet data-key blob, the [ct || mac || salt-iv] layout, the
     zero-IV no-salt path and the tolerant Oracle pad strip, byte-exact."""
 
@@ -243,37 +242,7 @@ class TestTdeGoldenVectors:
         with _pytest.raises(ValueError, match="AES"):
             OraTdeColumnDecrypter(bytes(0x30), 1, 3)
 
-    # -- INTALG 3 (GCM): SP 800-38D CTR+GHASH over the AES primitive -----
-
-    def test_gcm_against_independent_library(self):
-        """Byte-exact cross-validation of aes_gcm_decrypt against
-        OpenSSL (via `cryptography`) for 12- and 16-byte IVs, unaligned
-        lengths, AAD, and all three AES key sizes; tampered tags raise."""
-        import pytest as _pytest
-
-        cryptography = _pytest.importorskip("cryptography")  # noqa: F841
-        from cryptography.hazmat.primitives.ciphers import (
-            Cipher, algorithms, modes,
-        )
-
-        from oracdc_spark.functions.tde import aes_gcm_decrypt
-
-        for keylen in (16, 24, 32):
-            for ivlen in (12, 16):
-                for ptlen in (0, 5, 33):
-                    key = bytes(range(keylen))
-                    iv = bytes(range(100, 100 + ivlen))
-                    pt = bytes((i * 7) % 256 for i in range(ptlen))
-                    aad = b"hdr"
-                    enc = Cipher(
-                        algorithms.AES(key), modes.GCM(iv)
-                    ).encryptor()
-                    enc.authenticate_additional_data(aad)
-                    ct = enc.update(pt) + enc.finalize()
-                    assert aes_gcm_decrypt(ct, key, iv, enc.tag, aad) == pt
-                    bad = bytes([enc.tag[0] ^ 1]) + enc.tag[1:]
-                    with _pytest.raises(ValueError, match="tag mismatch"):
-                        aes_gcm_decrypt(ct, key, iv, bad, aad)
+    # -- INTALG 3 (GCM): SP 800-38D AES-GCM with Oracle's 16-byte IV ----
 
     def test_gcm_tde_column_goldens(self):
         """INTALG 3 column decrypt over independently generated goldens:
@@ -333,25 +302,27 @@ class TestTdeGoldenVectors:
         assert dec.decrypt(ct + mac + iv, salt=True) == self._3DES_PT
 
     def test_3des_oracle_padding_stripped(self):
-        from oracdc_spark.functions.des import Des3Ede
+        from cryptography.hazmat.decrepit.ciphers.algorithms import TripleDES
+        from cryptography.hazmat.primitives.ciphers import Cipher, modes
+
         from oracdc_spark.functions.tde import OraTdeColumnDecrypter
 
         pt, pad = b"AB", bytes([6] * 6)
-        ct = Des3Ede(self._3DES_KEY).cbc_encrypt(pt + pad, bytes(8))
+        enc = Cipher(TripleDES(self._3DES_KEY), modes.CBC(bytes(8))).encryptor()
+        ct = enc.update(pt + pad) + enc.finalize()
         dec = OraTdeColumnDecrypter(self._3des_blob(), 1, 2)
         assert dec.decrypt(ct, salt=False) == pt
 
     def test_single_des_fips_vector(self):
-        from oracdc_spark.functions.des import (
-            des_decrypt_block,
-            des_encrypt_block,
-        )
+        """FIPS 46-3 single-DES vector through the ENCALG 1 decrypter:
+        EDE with K1=K2=K3 is single DES, and one unsalted NOMAC block
+        under the zero IV is the raw block decrypt."""
+        from oracdc_spark.functions.tde import OraTdeColumnDecrypter
 
         k = bytes.fromhex("133457799BBCDFF1")
-        pt = bytes.fromhex("0123456789ABCDEF")
-        ct = des_encrypt_block(pt, k)
-        assert ct == bytes.fromhex("85E813540F0AB405")
-        assert des_decrypt_block(ct, k) == pt
+        ct = bytes.fromhex("85E813540F0AB405")
+        dec = OraTdeColumnDecrypter(bytes(0x10) + k * 3, 1, 2)
+        assert dec.decrypt(ct, salt=False) == bytes.fromhex("0123456789ABCDEF")
 
     def test_orcl_pad_tolerates_absent_padding(self):
         from oracdc_spark.functions.tde import orcl_unpad
@@ -376,43 +347,42 @@ class TestTdeGoldenVectors:
 
 class TestTdeColumnLayout:
     """Oracle TDE column image layout (ct || mac || salt-iv) round-trips
-    through the JVM-side restructure decrypt
-    (OraCdcTdeColumnDecrypter.java:157-196)."""
+    through the Arrow decrypt UDF on Spark
+    (OraCdcTdeColumnDecrypter.java:157-196): OpenSSL-encrypted salted
+    columns, with and without the SHA-1 MAC, decrypt back exactly."""
 
     KEY = bytes(range(16))  # AES128 data key
 
-    def test_salted_sha1_roundtrip(self, spark):
-        from oracdc_spark.functions.tde import (
-            MAC_SHA1,
-            tde_decrypt_column,
-            tde_encrypt_column,
-        )
+    def _roundtrip(self, spark, plains, int_alg, mac):
+        from cryptography.hazmat.primitives import padding
+        from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
-        df = spark.createDataFrame(
-            [(1, b"c1024a153351"), (2, b"hello TDE world")], "id int, v binary"
-        )
-        enc = df.select("id", tde_encrypt_column("v", self.KEY, MAC_SHA1).alias("e"))
-        out = enc.select(
-            "id", tde_decrypt_column("e", self.KEY, salt=True, int_alg=MAC_SHA1).alias("p")
-        ).collect()
-        assert {r.id: bytes(r.p) for r in out} == {
-            1: b"c1024a153351", 2: b"hello TDE world"
-        }
+        from oracdc_spark.functions.tde import ENCALG_AES128, tde_decrypt_udf
+
+        rows = []
+        for i, pt in plains.items():
+            iv = bytes((i * 11 + j) % 256 for j in range(16))
+            padder = padding.PKCS7(128).padder()
+            enc = Cipher(algorithms.AES(self.KEY), modes.CBC(iv)).encryptor()
+            ct = enc.update(padder.update(pt) + padder.finalize()) + enc.finalize()
+            rows.append((i, ct + mac + iv))
+        df = spark.createDataFrame(rows, "id int, e binary")
+        udf = tde_decrypt_udf(bytes(0x10) + self.KEY, ENCALG_AES128, int_alg, salt=True)
+        out = df.select("id", udf("e").alias("p")).collect()
+        return {r.id: bytes(r.p) for r in out}
+
+    def test_salted_sha1_roundtrip(self, spark):
+        from oracdc_spark.functions.tde import INTALG_SHA1
+
+        plains = {1: b"c1024a153351", 2: b"hello TDE world"}
+        mac = bytes(range(100, 120))  # stripped, never verified
+        assert self._roundtrip(spark, plains, INTALG_SHA1, mac) == plains
 
     def test_salted_nomac_roundtrip(self, spark):
-        from oracdc_spark.functions.tde import (
-            MAC_NOMAC,
-            tde_decrypt_column,
-            tde_encrypt_column,
-        )
+        from oracdc_spark.functions.tde import INTALG_NOMAC
 
-        df = spark.createDataFrame([(1, b"\x00\x01\x02\x03binary")], "id int, v binary")
-        enc = df.select("id", tde_encrypt_column("v", self.KEY, MAC_NOMAC).alias("e"))
-        out = enc.select(
-            "id",
-            tde_decrypt_column("e", self.KEY, salt=True, int_alg=MAC_NOMAC).alias("p"),
-        ).collect()
-        assert bytes(out[0].p) == b"\x00\x01\x02\x03binary"
+        plains = {1: b"\x00\x01\x02\x03binary"}
+        assert self._roundtrip(spark, plains, INTALG_NOMAC, b"") == plains
 
     def test_wallet_blob_key_extraction(self):
         from oracdc_spark.functions.tde import data_key_from_wallet_blob
