@@ -76,10 +76,7 @@ class CdcQueryListener(StreamingQueryListener):
         n = p.numInputRows or 0
         self.total_rows += n
         self.last_rows_per_second = p.processedRowsPerSecond or 0.0
-        try:
-            self.state_rows = sum(s.numRowsTotal for s in p.stateOperators)
-        except Exception:
-            pass
+        self.state_rows = sum(s.numRowsTotal for s in p.stateOperators)
         self.history.append(
             {
                 "SentBatchesCount": self.batches,

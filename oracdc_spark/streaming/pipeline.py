@@ -7,6 +7,12 @@ One streaming DAG replaces the reference's threads and queues
       → stateful per-XID assembly (G1-G9, streaming/assembly.py)
       → foreachBatch: PK dedup (K6) + MERGE into the replica (K2/K3)
 
+The sink persists each micro-batch, so the stateful assembly runs once
+per trigger and every sink job (affected-bucket scan, bucket rewrite,
+strict completeness check) reads those rows.  Persisting is safe
+because the batch's lineage reads only the feed and the state store,
+never the replica the sink rewrites.
+
 Offsets/exactly-once: the checkpoint directory carries source offsets
 and the state store; the MERGE sink is idempotent under replay because
 last-write-wins comparison includes (commit_scn, scn, ssn) — together
@@ -82,28 +88,32 @@ def run_pipeline(
     assembled = assemble_transactions(stream, impl=impl)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if strict_completeness:
-            import pyspark.sql.functions as F
+        # an empty batch needs no guard: both merges return on an empty
+        # affected-bucket list
+        batch.persist()
+        try:
+            if strict_completeness:
+                import pyspark.sql.functions as F
 
-            from oracdc_spark.operators.filters import (
-                assert_complete,
-                incomplete_rows_predicate,
-            )
-
-            # post-assembly records are all non-rollback survivors
-            assert_complete(
-                batch.withColumn("rollback", F.lit(False)).filter(
-                    incomplete_rows_predicate()
+                from oracdc_spark.operators.filters import (
+                    assert_complete,
+                    incomplete_rows_predicate,
                 )
-            )
-        if mode == "audit_trail":
-            from oracdc_spark.sinks.merge import scd2_merge_batch
 
-            scd2_merge_batch(batch.sparkSession, batch, replica_path)
-            return
-        merge_batch(batch.sparkSession, batch, replica_path)
+                # post-assembly records are all non-rollback survivors
+                assert_complete(
+                    batch.withColumn("rollback", F.lit(False)).filter(
+                        incomplete_rows_predicate()
+                    )
+                )
+            if mode == "audit_trail":
+                from oracdc_spark.sinks.merge import scd2_merge_batch
+
+                scd2_merge_batch(batch.sparkSession, batch, replica_path)
+            else:
+                merge_batch(batch.sparkSession, batch, replica_path)
+        finally:
+            batch.unpersist()
 
     writer = (
         assembled.writeStream.foreachBatch(sink)

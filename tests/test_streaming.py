@@ -91,6 +91,91 @@ def test_end_to_end_pipeline_replica(spark):
         assert got == expected
 
 
+
+def _feed_row(xid, scn, op, pk=None, changed_cols="TOTALPRICE,STATUS"):
+    """One FEED_DDL row on SCOTT.ORDERS; control records carry no pk."""
+    dml = pk is not None
+    return (
+        scn, 0, f"1.{scn}.0", xid, op, False, "SCOTT", "ORDERS",
+        f"R{pk}" if dml else None, pk, 10.0 * pk if dml else None,
+        "O" if dml else None, None, None, 0, changed_cols if dml else "",
+    )
+
+
+def _write_feed_file(spark, d: str, rows) -> str:
+    """All rows in ONE parquet file, so one trigger reads them all."""
+    from oracdc_spark.streaming.pipeline import FEED_DDL
+
+    feed_dir = f"{d}/feed"
+    spark.createDataFrame(rows, FEED_DDL).coalesce(1).write.parquet(feed_dir)
+    return feed_dir
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# XID A commits inside the file; XIDs B and C stay open
+_ONE_COMMITTED_TWO_OPEN = [
+    _feed_row("A", 10, 1, pk=1),
+    _feed_row("B", 11, 1, pk=2),
+    _feed_row("C", 12, 1, pk=3),
+    _feed_row("A", 13, 7),
+]
+
+
+@pytest.mark.parametrize("mode", ["replicate", "audit_trail"])
+def test_pipeline_assembles_each_batch_once(spark, mode):
+    """Every sink job reads the persisted batch, so the stateful assembly
+    runs once per trigger.  Each execution of the assembly adds to the
+    state operator's progress counters, so they are exact only then:
+    two open transactions kept, one committed transaction removed.  The
+    persisted batch is released when the sink returns."""
+    spark.catalog.clearCache()
+    with tempfile.TemporaryDirectory() as d:
+        feed_dir = _write_feed_file(spark, d, _ONE_COMMITTED_TWO_OPEN)
+        q = run_pipeline(
+            spark, feed_dir, f"{d}/replica", f"{d}/ckpt",
+            max_files_per_trigger=10, mode=mode,
+        )
+        q.processAllAvailable()
+        q.stop()
+        [progress] = [p for p in q.recentProgress if "addBatch" in p["durationMs"]]
+        state = progress["stateOperators"][0]
+        assert state["numRowsTotal"] == 2
+        assert state["numRowsUpdated"] == 2
+        assert state["numRowsRemoved"] == 1
+        assert _cache_is_empty(spark)
+
+        rows = replica_state(spark, f"{d}/replica").collect()
+        assert {(r.pk, r.totalprice, r.status) for r in rows} == {(1, 10.0, "O")}
+        if mode == "audit_trail":
+            assert {
+                (r.version, r.valid_from_scn, r.valid_to_scn, r.is_deleted, r.is_current)
+                for r in rows
+            } == {(1, 13, None, 0, 1)}
+
+
+def test_pipeline_failed_sink_releases_batch(spark):
+    """A sink that raises still releases the persisted batch: a strict
+    completeness failure (a committed INSERT whose changed columns lack
+    STATUS) fails the query and leaves nothing cached."""
+    spark.catalog.clearCache()
+    with tempfile.TemporaryDirectory() as d:
+        feed_dir = _write_feed_file(
+            spark, d,
+            [_feed_row("A", 10, 1, pk=1, changed_cols="TOTALPRICE"), _feed_row("A", 13, 7)],
+        )
+        q = run_pipeline(
+            spark, feed_dir, f"{d}/replica", f"{d}/ckpt",
+            max_files_per_trigger=10, strict_completeness=True,
+        )
+        with pytest.raises(Exception, match="IncompleteRowError"):
+            q.processAllAvailable()
+        q.stop()
+        assert _cache_is_empty(spark)
+
+
 class _FakeState:
     """Duck-typed GroupState for driving assemble_fn directly."""
 
